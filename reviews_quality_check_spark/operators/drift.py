@@ -7,9 +7,11 @@ full-outer join + aggregate. The drift-over-time variant compares each
 ``warc_ts`` window's categorical distribution to the previous window
 (north_star: "KL/PSI comparison ... across warc_ts windows").
 
-Scale: the heavy step is ONE groupBy(window, category) over the input;
-everything downstream operates on per-window histograms (|categories| ×
-|windows| rows — broadcast-sized even at 10^12 input rows).
+Scale: the only distributed step of window drift is ONE
+groupBy(window, category) over the input. The histogram it yields
+(|windows| × |categories| rows — small even at 10^12 input rows) then
+goes to a single partition, where ranking, side alignment and the sums
+run with no join, no broadcast and no further exchange.
 """
 
 from __future__ import annotations
@@ -47,24 +49,6 @@ def kl_divergence(real: DataFrame, synth: DataFrame) -> DataFrame:
     )
 
 
-def window_histogram(
-    df: DataFrame, ts_col: str, cat_col: str, window_expr: str = "1 day",
-    count_col: str | None = None,
-) -> DataFrame:
-    """Per-window normalized categorical histogram:
-    (window_start, category, cnt, p). ``count_col`` sums pre-aggregated
-    counts (streaming history rows) instead of counting raw rows."""
-    win = F.window(F.col(ts_col), window_expr).getField("start").alias("window_start")
-    agg = F.sum(count_col) if count_col else F.count(F.lit(1))
-    hist = df.groupBy(win, F.col(cat_col).alias("category")).agg(
-        agg.alias("cnt")
-    )
-    wtot = Window.partitionBy("window_start")
-    return hist.withColumn(
-        "p", F.col("cnt").cast("double") / F.sum("cnt").over(wtot)
-    )
-
-
 def categorical_window_drift(
     df: DataFrame,
     ts_col: str,
@@ -77,38 +61,60 @@ def categorical_window_drift(
     """Per-window drift vs the previous window over a categorical column.
 
     Output: (window_start, drift) for every window that has a
-    predecessor. Categories absent on one side get probability ``eps``
-    (keeps KL finite — engine semantics; the reference only ever
+    predecessor (the previous window that has rows, not the previous
+    calendar window). Categories absent on one side get probability
+    ``eps`` (keeps KL finite — engine semantics; the reference only ever
     compares two explicit dicts, windows are the north_star addition).
+    ``count_col`` sums pre-aggregated counts (streaming history rows)
+    instead of counting raw rows.
 
-    The window→previous-window map is computed with a single-partition
-    lag — safe because it is |windows| rows, not input rows.
+    No joins: windows are ranked with a dense_rank over the histogram
+    (one single-partition exchange of |windows| x |categories| rows),
+    and each histogram cell is emitted twice — as the current side of
+    its own window k and as the previous side of window k+1 — so a
+    groupBy(k, category) aligns the two sides. Every step after the
+    rank runs on that one partition, which needs no further exchange.
     """
-    probs = window_histogram(df, ts_col, cat_col, window_expr, count_col=count_col)
-
-    wmap = (
-        probs.select("window_start")
-        .distinct()
-        .withColumn("prev_window", F.lag("window_start").over(Window.orderBy("window_start")))
-        .filter(F.col("prev_window").isNotNull())
+    win = F.window(F.col(ts_col), window_expr).getField("start")
+    agg = F.sum(count_col) if count_col else F.count(F.lit(1))
+    hist = (
+        df.groupBy(win.alias("window_start"), F.col(cat_col).alias("category"))
+        .agg(agg.alias("cnt"))
+        # rows without a window never had a predecessor nor a successor
+        .filter(F.col("window_start").isNotNull())
     )
-    cur = probs.join(F.broadcast(wmap), "window_start").select(
-        "window_start", "prev_window", "category", "p"
+    probs = hist.withColumn(
+        "k", F.dense_rank().over(Window.orderBy("window_start"))
+    ).withColumn(
+        "p", F.col("cnt").cast("double") / F.sum("cnt").over(Window.partitionBy("k"))
     )
-    prev = probs.select(
-        F.col("window_start").alias("prev_window"),
-        F.col("category"),
-        F.col("p").alias("p_prev"),
-    ).join(
-        F.broadcast(wmap.select(F.col("window_start").alias("next_window"), "prev_window")),
-        "prev_window",
-    )
-    aligned = cur.join(
-        prev.select(
-            F.col("next_window").alias("window_start"), "category", "p_prev"
-        ),
-        ["window_start", "category"],
-        "full_outer",
+    no_p = F.lit(None).cast("double")
+    sides = probs.select(
+        "category",
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("k"), F.col("window_start"), F.col("p"),
+                    no_p.alias("p_prev"), F.lit(False).alias("is_prev"),
+                ),
+                F.struct(
+                    (F.col("k") + 1).alias("k"),
+                    F.lit(None).cast("timestamp").alias("window_start"),
+                    no_p.alias("p"), F.col("p").alias("p_prev"),
+                    F.lit(True).alias("is_prev"),
+                ),
+            )
+        ).alias("s"),
+    ).select("category", "s.*")
+    aligned = sides.groupBy(
+        "k",
+        "category",
+        # a NULL category never matches across windows (join semantics)
+        F.when(F.col("category").isNull(), F.col("is_prev")).alias("null_side"),
+    ).agg(
+        F.max("window_start").alias("window_start"),
+        F.max("p").alias("p"),
+        F.max("p_prev").alias("p_prev"),
     )
 
     p = F.greatest(F.coalesce(F.col("p"), F.lit(0.0)), F.lit(eps))
@@ -120,8 +126,13 @@ def categorical_window_drift(
     else:
         raise ValueError(f"unknown drift metric: {metric}")
     return (
-        aligned.groupBy("window_start")
-        .agg(F.sum(term).alias("drift"))
+        # k = 1 has no predecessor; the k past the last window has no
+        # current side, so its window_start stays null
+        aligned.filter(F.col("k") > 1)
+        .groupBy("k")
+        .agg(F.max("window_start").alias("window_start"), F.sum(term).alias("drift"))
+        .filter(F.col("window_start").isNotNull())
+        .select("window_start", "drift")
         .orderBy("window_start")
     )
 

@@ -98,11 +98,10 @@ def compute_states(
 def append_states(states: DataFrame, out_dir: str) -> None:
     """Idempotent per-partition commit of state rows (dynamic overwrite
     on partition_id — re-ingesting a partition replaces its states)."""
-    spark = states.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         states.repartition("partition_id")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("partition_id")
         .parquet(out_dir)
     )

@@ -8,9 +8,16 @@ Plan shape (the 100 TB story):
     failed checks per row — rows with no violations contribute nothing.
   - Per-partition counts are a single groupBy over the flag columns
     (map-side partial aggregation, narrow shuffle: one row per
-    partition_id per reducer).
+    partition_id per reducer). The same groupBy also counts the rows of
+    each partition, emitted as one extra verdict row under the reserved
+    check name ``__rows_scanned`` (violation_count = rows; filtered out
+    of the verdicts a run returns or writes).
   - Each AggCheck contributes its own bounded-shuffle plan (salted
     aggregates, window histograms) and unions into the verdict table.
+  - A committed run evaluates that verdict table ONCE, into a persisted
+    one-partition frame: verdicts, metrics history and lineage are all
+    written from it, so the tiny sinks cost one Spark job each instead
+    of re-running the verdict plan.
 
 Checkpoint/resume (north_rule): verdicts/violations are written
 partitioned by partition_id with dynamic partition overwrite (an
@@ -26,11 +33,21 @@ import uuid
 from dataclasses import dataclass
 from pathlib import Path
 
+from pyspark import StorageLevel
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from reviews_quality_check_spark.plans.checks import Suite
 
+# Reserved check name of the per-partition row-count verdict row: the
+# volume series of the metrics history and the source of lineage.
+ROWS_SCANNED = "__rows_scanned"
+# Read errors that mean "nothing committed yet": the sink directory is
+# absent, or holds no data files (a write of zero rows leaves only
+# _SUCCESS). Any other read error is a broken history and propagates.
+_NO_HISTORY = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 # Flagged-projection caches of previous runs (bounded to one entry):
 # dropped at the start of the next run — see SuiteRunner.run.
 _RUN_CACHES: list[DataFrame] = []
@@ -113,15 +130,10 @@ class SuiteRunner:
         )
 
     def row_verdicts_plan(self, flagged: DataFrame) -> DataFrame:
-        """One groupBy: per-partition counts for every RowCheck at once."""
+        """One groupBy: per-partition counts for every RowCheck at once,
+        plus the partition's ``__rows_scanned`` row (violation_count =
+        rows scanned, the other values null)."""
         suite = self.suite
-        if not suite.row_checks:
-            # agg-only suite (same array<void> guard as violations_plan)
-            return flagged.sparkSession.createDataFrame(
-                [],
-                "partition_id string, check_name string, passed boolean, "
-                "violation_count bigint, metric_value double, threshold double",
-            )
         aggs = [F.count(F.lit(1)).alias("__n")]
         for i, _rc in enumerate(suite.row_checks):
             aggs.append(F.sum(F.col(f"__v{i}").cast("long")).alias(f"__c{i}"))
@@ -140,6 +152,15 @@ class SuiteRunner:
             )
             for i, rc in enumerate(suite.row_checks)
         ]
+        verdict_structs.append(
+            F.struct(
+                F.lit(ROWS_SCANNED).alias("check_name"),
+                F.lit(None).cast("boolean").alias("passed"),
+                F.col("__n").alias("violation_count"),
+                F.lit(None).cast("double").alias("metric_value"),
+                F.lit(None).cast("double").alias("threshold"),
+            )
+        )
         return (
             counted.select(
                 "partition_id", F.explode(F.array(*verdict_structs)).alias("v")
@@ -206,7 +227,8 @@ class SuiteRunner:
         caching, not optimization), and the previous run's cache is
         dropped when a new run starts — at most one suite cache is ever
         alive. Every run therefore recomputes from the input exactly
-        once."""
+        once. Committed runs release the cache when they finish, and also
+        when a write fails."""
         spark = df.sparkSession
         run_id = uuid.uuid4().hex[:12]
 
@@ -233,8 +255,6 @@ class SuiteRunner:
 
         flagged = self._flagged(df, partition_expr)
         if persist:
-            from pyspark import StorageLevel
-
             for old in _RUN_CACHES:
                 try:
                     old.unpersist()
@@ -254,33 +274,47 @@ class SuiteRunner:
         violations = self.violations_plan(flagged)
 
         if self.out_dir:
-            if run_seq is None:
-                run_seq = self.next_run_seq(spark)
-            self._commit(spark, run_id, run_seq, flagged, verdicts, violations)
-            if persist:
-                flagged.unpersist()  # outputs are on disk; drop the cache
+            try:
+                if run_seq is None:
+                    run_seq = self.next_run_seq(spark)
+                self._commit(run_id, run_seq, verdicts, violations)
+            finally:
+                if persist:
+                    flagged.unpersist()  # outputs are on disk (or failed)
             return SuiteResult(
                 self._read_out("verdicts", spark),
                 self._read_out("violations", spark),
                 -1,
                 skipped,
             )
+        verdicts = verdicts.filter(F.col("check_name") != ROWS_SCANNED)
         return SuiteResult(verdicts, violations, -1, skipped)
 
     # -- checkpoint ---------------------------------------------------------------
     def _path(self, name: str) -> str:
         return str(Path(self.out_dir) / name)
 
-    def _read_out(self, name: str, spark: SparkSession) -> DataFrame:
+    def _read_history(self, name: str, spark: SparkSession) -> DataFrame | None:
+        """The committed sink ``name``, or None when nothing is committed
+        there yet. Any other read error (a corrupt or unreadable sink)
+        propagates: treating it as "no history" would silently recompute
+        every partition or reuse run_seqs."""
         try:
             return spark.read.parquet(self._path(name))
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() in _NO_HISTORY:
+                return None
+            raise
+
+    def _read_out(self, name: str, spark: SparkSession) -> DataFrame:
+        out = self._read_history(name, spark)
+        if out is None:
             return spark.createDataFrame([], "partition_id string, check_name string")
+        return out
 
     def committed_partitions(self, spark: SparkSession) -> list[str]:
-        try:
-            lineage = spark.read.parquet(self._path("lineage"))
-        except Exception:
+        lineage = self._read_history("lineage", spark)
+        if lineage is None:
             return []
         return [
             r[0]
@@ -292,92 +326,93 @@ class SuiteRunner:
 
     def _commit(
         self,
-        spark: SparkSession,
         run_id: str,
         run_seq: int,
-        flagged: DataFrame,
         verdicts: DataFrame,
         violations: DataFrame,
     ) -> None:
         """Write outputs partitioned by partition_id (dynamic overwrite =
-        idempotent per-partition commit), then append lineage rows last."""
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            verdicts.repartition("partition_id")
-            .write.mode("overwrite")
-            .partitionBy("partition_id")
-            .parquet(self._path("verdicts"))
-        )
-        # Deterministic per-(partition, check) cap: a global limit() would
-        # let one high-volume check evict every other check's rows, and the
-        # retained subset would vary across partitionings and between
-        # one-shot and resumed runs. row_number over row_key pins the
-        # retained set.
-        from pyspark.sql.window import Window
+        idempotent per-partition commit), then append lineage rows last.
 
-        capw = Window.partitionBy("partition_id", "check_name").orderBy("row_key")
-        (
-            violations.withColumn("__rn", F.row_number().over(capw))
-            .filter(F.col("__rn") <= self.cap)
-            .drop("__rn")
-            .repartition("partition_id")
-            .write.mode("overwrite")
-            .partitionBy("partition_id")
-            .parquet(self._path("violations"))
+        The verdict plan (row counts, every AggCheck, ``__rows_scanned``)
+        is evaluated once, by the verdicts write, into a persisted
+        one-partition frame (one row per partition x check, so one task
+        holds it); metrics and lineage are read back from it.
+        It is epoch-tagged like the flagged projection, so no other run
+        can hit it, and released even when a write fails."""
+        evaluated = (
+            verdicts.withColumn("__cache_epoch", F.lit(run_id))
+            .coalesce(1)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        lineage = (
-            flagged.groupBy(F.col("__part").alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows_scanned"))
-            .select(
+        is_rows = F.col("check_name") == ROWS_SCANNED
+        try:
+            (
+                evaluated.filter(~is_rows)
+                .drop("__cache_epoch")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("partition_id")
+                .parquet(self._path("verdicts"))
+            )
+            # Deterministic per-(partition, check) cap: a global limit()
+            # would let one high-volume check evict every other check's
+            # rows, and the retained subset would vary across
+            # partitionings and between one-shot and resumed runs.
+            # row_number over row_key pins the retained set. The window
+            # runs on the write's partition_id partitioning, so the rows
+            # shuffle once.
+            capw = Window.partitionBy("partition_id", "check_name").orderBy("row_key")
+            (
+                violations.repartition("partition_id")
+                .withColumn("__rn", F.row_number().over(capw))
+                .filter(F.col("__rn") <= self.cap)
+                .drop("__rn")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("partition_id")
+                .parquet(self._path("violations"))
+            )
+            # metrics HISTORY (append-only, one row per run x partition x
+            # check + the __rows_scanned volume series) — the input
+            # history_anomalies() reads. Written BEFORE lineage: lineage
+            # is the commit marker, so a crash between the two
+            # re-processes the partition on resume. history_anomalies
+            # keeps the LAST row per (series, run_seq), which makes the
+            # replay invisible WHEN the resume runs under the same
+            # run_seq — resume callers should pass the crashed run's
+            # run_seq explicitly; with auto-seq the replayed partition
+            # lands at a fresh seq instead (a duplicate history point
+            # with identical values, harmless to the detectors'
+            # thresholds but visible in the series).
+            evaluated.select(
+                F.lit(run_id).alias("run_id"),
+                F.lit(int(run_seq)).cast("long").alias("run_seq"),
+                "partition_id",
+                "check_name",
+                F.col("violation_count").cast("long").alias("value"),
+                F.col("metric_value").cast("double").alias("metric_value"),
+            ).write.mode("append").parquet(self._path("metrics"))
+            evaluated.filter(is_rows).select(
                 F.lit(run_id).alias("run_id"),
                 "partition_id",
                 F.lit(self.suite.name).alias("suite_name"),
-                "rows_scanned",
+                F.col("violation_count").alias("rows_scanned"),
                 F.lit(
                     len(self.suite.row_checks) + len(self.suite.agg_checks)
                 ).cast("int").alias("checks_run"),
                 F.current_timestamp().alias("committed_at"),
-            )
-        )
-        # metrics HISTORY (append-only, one row per run x partition x
-        # check + a __rows_scanned volume series) — the input
-        # history_anomalies() reads. Written BEFORE lineage: lineage is
-        # the commit marker, so a crash between the two re-processes the
-        # partition on resume. history_anomalies keeps the LAST row per
-        # (series, run_seq), which makes the replay invisible WHEN the
-        # resume runs under the same run_seq — resume callers should
-        # pass the crashed run's run_seq explicitly; with auto-seq the
-        # replayed partition lands at a fresh seq instead (a duplicate
-        # history point with identical values, harmless to the
-        # detectors' thresholds but visible in the series).
-        metrics = verdicts.select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(int(run_seq)).cast("long").alias("run_seq"),
-            "partition_id",
-            "check_name",
-            F.col("violation_count").cast("long").alias("value"),
-            F.col("metric_value").cast("double").alias("metric_value"),
-        ).unionByName(
-            lineage.select(
-                "run_id",
-                F.lit(int(run_seq)).cast("long").alias("run_seq"),
-                "partition_id",
-                F.lit("__rows_scanned").alias("check_name"),
-                F.col("rows_scanned").cast("long").alias("value"),
-                F.lit(None).cast("double").alias("metric_value"),
-            )
-        )
-        metrics.write.mode("append").parquet(self._path("metrics"))
-        lineage.write.mode("append").parquet(self._path("lineage"))
+            ).write.mode("append").parquet(self._path("lineage"))
+        finally:
+            evaluated.unpersist()
 
     # -- metric history -----------------------------------------------------
 
     def next_run_seq(self, spark: SparkSession) -> int:
         """Next run sequence number: max committed run_seq + 1 (0 for a
         fresh out_dir). A bounded-metadata read of the metrics sink."""
-        try:
-            m = spark.read.parquet(self._path("metrics"))
-        except Exception:
+        m = self._read_history("metrics", spark)
+        if m is None:
             return 0
         row = m.agg(F.max("run_seq").alias("mx")).collect()[0]
         return 0 if row["mx"] is None else int(row["mx"]) + 1

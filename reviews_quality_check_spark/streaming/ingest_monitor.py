@@ -56,7 +56,6 @@ def metrics_foreach_batch(metrics_dir: str, series_col: str):
 
     def callback(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         m = batch_metrics(batch_df, series_col)
         try:
             known = (
@@ -73,6 +72,7 @@ def metrics_foreach_batch(metrics_dir: str, series_col: str):
             m.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
             .repartition(1)
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(metrics_dir)
         )

@@ -87,6 +87,66 @@ def test_window_drift_new_category_uses_eps(spark):
     assert math.isfinite(out[0]["drift"]) and out[0]["drift"] > 5  # ln(1/eps)-ish
 
 
+def _daily(spark, counts, count_col=False):
+    """Rows of a {day: {category: n}} histogram, one row per event, or
+    one pre-aggregated (ts, cat, n) row per cell with ``count_col``."""
+    rows = []
+    for day, hist in counts.items():
+        ts = f"2024-01-{day:02d} 08:00:00"
+        for cat, n in hist.items():
+            rows += [(ts, cat, n)] if count_col else [(ts, cat, 1)] * n
+    return spark.createDataFrame(rows, "ts string, cat string, n long").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+
+
+def _by_day(rows):
+    return {r["window_start"].day: r["drift"] for r in rows}
+
+
+def test_window_drift_category_missing_from_middle_window(spark):
+    """'a' is in days 1 and 3 but not day 2: each side of each pair gets
+    the eps floor for the category it lacks (reference psi with eps)."""
+    counts = {1: {"a": 6, "b": 4}, 2: {"b": 10}, 3: {"a": 3, "b": 7}}
+    out = _by_day(
+        categorical_window_drift(_daily(spark, counts), "ts", "cat", metric="psi").collect()
+    )
+    assert set(out) == {2, 3}
+    assert out[2] == pytest.approx(O.psi(counts[2], counts[1], eps=1e-6), rel=1e-9)
+    assert out[3] == pytest.approx(O.psi(counts[3], counts[2], eps=1e-6), rel=1e-9)
+
+
+def test_window_drift_calendar_gap_uses_previous_existing_window(spark):
+    """No rows on day 2: day 3 is compared with day 1, and day 2 gets no
+    row of its own."""
+    counts = {1: {"a": 8, "b": 2}, 3: {"a": 3, "b": 7}}
+    out = _by_day(categorical_window_drift(_daily(spark, counts), "ts", "cat").collect())
+    assert set(out) == {3}
+    assert out[3] == pytest.approx(O.kl_divergence(counts[3], counts[1]), rel=1e-9)
+
+
+def test_window_drift_count_col_weights_rows(spark):
+    """count_col sums pre-aggregated counts: same drift as the expanded
+    rows, and as the reference on the weighted histograms."""
+    counts = {1: {"a": 30, "b": 10}, 2: {"a": 10, "b": 30, "c": 5}}
+    agg = _daily(spark, counts, count_col=True)
+    got = _by_day(categorical_window_drift(agg, "ts", "cat", count_col="n").collect())
+    raw = _by_day(categorical_window_drift(_daily(spark, counts), "ts", "cat").collect())
+    assert set(got) == {2}
+    assert got[2] == pytest.approx(raw[2], rel=1e-12)
+    want = O.psi(counts[2], counts[1], eps=1e-6)
+    psi = _by_day(
+        categorical_window_drift(agg, "ts", "cat", metric="psi", count_col="n").collect()
+    )
+    assert psi[2] == pytest.approx(want, rel=1e-9)
+
+
+def test_window_drift_single_window_is_empty(spark):
+    df = _daily(spark, {4: {"a": 5, "b": 5}})
+    assert categorical_window_drift(df, "ts", "cat").collect() == []
+    assert categorical_window_drift(df, "ts", "cat", metric="psi").collect() == []
+
+
 def test_psi_symmetric_positive():
     p, q = {"a": 0.8, "b": 0.2}, {"a": 0.2, "b": 0.8}
     assert O.psi(p, q) == pytest.approx(O.psi(q, p), rel=1e-12)

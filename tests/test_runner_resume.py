@@ -114,3 +114,100 @@ def test_rerun_without_resume_is_idempotent(pages, tmp_path, spark):
         tuple(r) for r in spark.read.parquet(out + "/verdicts").collect()
     )
     assert first == second
+
+
+def test_verdicts_hide_reserved_rows_scanned_row(pages, tmp_path, spark):
+    """The per-partition row count rides in the verdict plan under the
+    reserved __rows_scanned name: it feeds metrics and lineage but never
+    shows up among the verdicts, returned or committed."""
+    res = SuiteRunner(_suite()).run(pages, F.col("day"), resume=False)
+    assert "__rows_scanned" not in {r["check_name"] for r in res.verdicts.collect()}
+
+    out = str(tmp_path / "out")
+    res = SuiteRunner(_suite(), out_dir=out).run(pages, F.col("day"), resume=False)
+    assert "__rows_scanned" not in {r["check_name"] for r in res.verdicts.collect()}
+    metrics = spark.read.parquet(out + "/metrics")
+    scanned = {
+        r["partition_id"]: (r["value"], r["metric_value"])
+        for r in metrics.filter(F.col("check_name") == "__rows_scanned").collect()
+    }
+    assert scanned == {"d1": (3, None), "d2": (3, None), "d3": (1, None)}
+    lineage = spark.read.parquet(out + "/lineage")
+    assert {r["partition_id"]: r["rows_scanned"] for r in lineage.collect()} == {
+        "d1": 3, "d2": 3, "d3": 1,
+    }
+    assert {r["checks_run"] for r in lineage.collect()} == {3}
+
+
+def test_agg_only_suite_commits_empty_violations(pages, tmp_path, spark):
+    """A suite without row checks writes no violation rows: the empty
+    sink is "nothing committed", not a broken history."""
+    s = C.Suite(name="aggonly", row_key="url")
+    s.add(C.uniqueness("url"))
+    runner = SuiteRunner(s, out_dir=str(tmp_path / "out"))
+    res = runner.run(pages, F.col("day"), resume=False)
+    assert res.violations.count() == 0
+    assert {r["partition_id"] for r in res.verdicts.collect()} == {"d1", "d2", "d3"}
+    assert set(runner.committed_partitions(spark)) == {"d1", "d2", "d3"}
+    assert runner.next_run_seq(spark) == 1
+
+
+def test_corrupt_lineage_fails_resume_loudly(pages, tmp_path, spark):
+    """A missing commit log means "nothing committed"; an unreadable one
+    is an error. Treating it as empty would silently recompute every
+    partition and append a second lineage row for each."""
+    out = tmp_path / "out"
+    runner = SuiteRunner(_suite(), out_dir=str(out))
+    assert runner.committed_partitions(spark) == []  # no lineage dir yet
+    assert runner.next_run_seq(spark) == 0
+    runner.run(pages, F.col("day"), resume=True)
+    files = list((out / "lineage").glob("*.parquet"))
+    assert files
+    for f in files:
+        f.write_bytes(b"not parquet at all")
+    with pytest.raises(Exception, match="Parquet"):
+        runner.run(pages, F.col("day"), resume=True)
+
+
+def test_commit_leaves_session_overwrite_mode_alone(pages, tmp_path, spark):
+    """Dynamic partition overwrite is a per-write option of the commit:
+    the session setting other writers see stays as it was, and a run
+    over one partition still keeps the other partitions' outputs."""
+    from reviews_quality_check_spark.operators.incremental_stats import (
+        append_states,
+        compute_states,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    out = str(tmp_path / "out")
+    runner = SuiteRunner(_suite(), out_dir=out)
+    runner.run(pages.filter(F.col("day") == "d1"), F.col("day"), resume=False)
+    runner.run(pages.filter(F.col("day") == "d2"), F.col("day"), resume=False)
+    assert spark.conf.get(key) == before
+    parts = {r["partition_id"] for r in spark.read.parquet(out + "/verdicts").collect()}
+    assert parts == {"d1", "d2"}
+
+    states = str(tmp_path / "states")
+    for day in ("d1", "d2"):
+        day_rows = pages.filter(F.col("day") == day)
+        append_states(compute_states(day_rows, "day", string_cols=("lang",)), states)
+    assert spark.conf.get(key) == before
+    assert {r["partition_id"] for r in spark.read.parquet(states).collect()} == {"d1", "d2"}
+
+
+def test_failed_sink_write_releases_caches(pages, tmp_path, spark):
+    """r6 honesty guard on the error path: a run whose sink write fails
+    raises and leaves no persisted frame behind."""
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    for rdd in list(sc._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "verdicts").write_text("a regular file, not a sink directory")
+    with pytest.raises(Exception):
+        SuiteRunner(_suite(), out_dir=str(out)).run(pages, F.col("day"), resume=False)
+    assert sc._jsc.getPersistentRDDs().size() == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -191,6 +191,13 @@ EXPECT: dict[str, dict] = {
         "plan_not_contains": "CartesianProduct|Exchange SinglePartition",
         "read_cols_max": 2,                      # doc_id + text
     },
+    "drift_kl_daily": {
+        # the (window, category) histogram is the only distributed step;
+        # ranking and side alignment run on one partition (|windows| x
+        # |categories| rows) — no join, no broadcast, no range sort
+        "plan_not_contains": "SortMergeJoin|BroadcastHashJoin|BroadcastExchange",
+        "max_exchanges": 2,                      # histogram agg + single-partition rank
+    },
     "numeric_drift_psi_daily": {
         # decile edges from the distinct-value aggregate (bounded grid)
         # broadcast back as one row; histograms are 10-bucket aggregates
