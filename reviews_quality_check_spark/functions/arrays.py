@@ -42,9 +42,3 @@ def lit_array_double(values) -> Column:
     return F.expr("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
 
 
-def lit_array_long(values) -> Column:
-    """Literal array<bigint> in one py4j call."""
-    vals = [int(v) for v in values]
-    if not vals:
-        return F.array().cast("array<bigint>")
-    return F.expr("array(" + ",".join(f"{v}L" for v in vals) + ")")

@@ -54,14 +54,6 @@ def punct_ratio(col: Column | str) -> Column:
     )
 
 
-def digit_ratio(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n_digit = F.length(c) - F.length(F.regexp_replace(c, "[0-9]", ""))
-    return F.when(F.length(c) > 0, n_digit.cast("double") / F.length(c).cast("double")).otherwise(
-        F.lit(0.0)
-    )
-
-
 def mean_word_length(tok: Column) -> Column:
     total = F.aggregate(tok, F.lit(0), lambda acc, w: acc + F.length(w))
     return F.when(
@@ -142,23 +134,6 @@ def _padded_trigrams(words: Column) -> Column:
 def lang_trigram_hits(tgs: Column, lang: str) -> Column:
     prof = lit_array_str(LANG_TRIGRAM_PROFILES[lang])
     return F.size(F.filter(tgs, lambda t: F.array_contains(prof, t)))
-
-
-def predict_lang_ngram(col: Column | str) -> Column:
-    """Argmax language over padded-trigram profile hits; ties resolved by
-    LANG_PRIORITY order; 'und' with zero hits. The 'n-gram heuristic'
-    lang-ID of the brief — boundary trigrams of function words carry the
-    signal, so it also fires on inflected/partial matches the word-level
-    marker scorer misses."""
-    from reviews_quality_check_spark.functions.text import whitespace_words
-
-    tgs = _padded_trigrams(whitespace_words(col))
-    hits = {lg: lang_trigram_hits(tgs, lg) for lg in LANG_PRIORITY}
-    best = F.greatest(*hits.values())
-    expr = F.lit("und")
-    for lg in reversed(LANG_PRIORITY):
-        expr = F.when((best > 0) & (hits[lg] == best), F.lit(lg)).otherwise(expr)
-    return expr
 
 
 # ---------------------------------------------------------------------------

@@ -31,9 +31,6 @@ from pyspark.sql import functions as F
 
 from reviews_quality_check_spark.functions.text import sentence_count, tokens
 
-VOWELS = "aeiouy"
-
-
 def syllables_in_word(w: Column) -> Column:
     """Syllable count of a single lowercase word (Column over string)."""
     vowel_groups = F.size(F.regexp_extract_all(w, F.lit("[aeiouy]+"), 0))

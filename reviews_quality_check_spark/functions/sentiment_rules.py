@@ -196,67 +196,6 @@ def threshold_for(sentiment: Column) -> Column:
     return expr
 
 
-def validate_sentiment_columns(
-    text: Column, labeled: Column, domain_col: Column,
-    text_lower: Column | None = None, tok: Column | None = None,
-) -> dict[str, Column]:
-    """The full validate_sentiment chain (sentiment.py:399-513) as a dict
-    of named Column expressions; attach with ``df.withColumns(...)``.
-
-    Pass pre-projected ``text_lower``/``tok`` columns (see
-    validate_sentiments) — the chain references them ~100×, and leaving
-    them as inline subtrees multiplies codegen size and eval cost.
-    """
-    if text_lower is None:
-        text_lower = F.lower(text)
-    if tok is None:
-        tok = tokens(text)
-
-    # 2. context — sentiment.py:224-249 (substring contrast, token negation,
-    #    multi-sentence counts empty fragments)
-    has_contrast = _substr_any(text_lower, CONTRAST_MARKERS)
-    n_words = F.size(tok)
-    multi_sentence = F.size(F.split(text, SENTENCE_SPLIT_RE)) > 1
-
-    # 3. model (surrogate) prediction
-    pred0, conf0 = surrogate_score(text_lower, tok)
-
-    # 4. domain merge — sentiment.py:368-397: if domain sentiment differs and
-    #    conf < 0.80 take the domain sentiment, conf *= 0.85
-    dsent = domain_sentiment(text_lower, domain_col)
-    take_domain = dsent.isNotNull() & (dsent != pred0) & (conf0 < 0.80)
-    pred1 = F.when(take_domain, dsent).otherwise(pred0)
-    conf1 = F.when(take_domain, conf0 * 0.85).otherwise(conf0)
-
-    # 5. neutral override — sentiment.py:466-477 (quirk #4: unconditional)
-    has_neutral_ind = _substr_any(text_lower, NEUTRAL_INDICATORS)
-    has_neutral_pat = neutral_pattern_hit(text_lower)
-    override = has_neutral_ind | has_neutral_pat
-    #    confidence adjustment — sentiment.py:333-366
-    adj = conf1
-    adj = F.when(has_contrast, adj * 0.9).otherwise(adj)
-    adj = F.when(multi_sentence & (n_words > 20), adj * 0.95).otherwise(adj)
-    neutral_count = _substr_hits(text_lower, NEUTRAL_INDICATORS)
-    adj = F.when(neutral_count > 1, F.least(adj * 1.1, F.lit(1.0))).otherwise(adj)
-    predicted = F.when(override, F.lit("neutral")).otherwise(pred1)
-    confidence = F.when(override, adj).otherwise(conf1)
-
-    # 6. mismatch — sentiment.py:480-493 (quirk #5: asymmetric rule)
-    thr_neutral = F.lit(THRESHOLDS_BINARY["neutral"])
-    mismatch_neutral_label = (confidence > thr_neutral) & (predicted != "neutral")
-    mismatch_other = (predicted != labeled) & (confidence >= threshold_for(predicted))
-    is_mismatch = F.when(labeled == "neutral", mismatch_neutral_label).otherwise(mismatch_other)
-
-    return {
-        "predicted": predicted,
-        "confidence": confidence,
-        "is_mismatch": is_mismatch,
-        "has_neutral_indicators": has_neutral_ind,
-        "has_neutral_patterns": has_neutral_pat,
-        "domain_sentiment": dsent,
-    }
-
-
 def attach_validation(
     df: DataFrame,
     text_col: str = "text",
@@ -266,10 +205,10 @@ def attach_validation(
 ) -> DataFrame:
     """Attach the 6 validation columns via STAGED projections.
 
-    Same formulas as validate_sentiment_columns, but every intermediate
-    (token hits, domain sentiment, pred/conf at each chain step) becomes
-    a real projected attribute before the next step references it. The
-    single-projection form duplicates the whole upstream chain inside
+    The full validate_sentiment chain (sentiment.py:399-513), with every
+    intermediate (token hits, domain sentiment, pred/conf at each chain
+    step) a real projected attribute before the next step references
+    it. A single-projection form duplicates the whole upstream chain inside
     each output column (is_mismatch alone embeds predicted 3x and
     confidence 2x), and because classic pyspark ANALYZES eagerly on
     every Dataset construction, that multiplicative tree cost ~1 s of

@@ -91,18 +91,6 @@ def char_ngrams_per_word(tok: Column, n: int = 3) -> Column:
     return F.flatten(F.transform(tok, word_grams))
 
 
-def jaccard(a: Column, b: Column) -> Column:
-    """Jaccard similarity of two array columns treated as sets.
-
-    reference: analyzers/similarity.py:102-110 (|∩| / |∪| of n-gram sets).
-    Returns 0.0 when the union is empty (reference returns 0.0 for empty).
-    """
-    da, db = F.array_distinct(a), F.array_distinct(b)
-    inter = F.size(F.array_intersect(da, db))
-    union = F.size(F.array_union(da, db))
-    return F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
-
-
 def shingles(col: Column | str, k: int = 3) -> Column:
     """k-token shingle set of the normalized text (MinHash input)."""
     return F.array_distinct(word_ngrams(tokens(col), k))

@@ -15,8 +15,6 @@ Dot products run through native higher-order functions
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -408,20 +406,6 @@ def near_dup_pairs_lsh(
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", F.round("cos", 4).alias("cos_sim"))
     )
-
-
-def _hyperplane(dim: int, plane_idx: int) -> list[float]:
-    """Deterministic pseudo-random unit hyperplane from md5 — no RNG
-    state, reproducible across sessions and engines."""
-    import hashlib
-
-    vals = []
-    for j in range(dim):
-        h = hashlib.md5(f"{plane_idx}:{j}".encode()).hexdigest()
-        # map 8 hex chars to (-1, 1)
-        vals.append(int(h[:8], 16) / float(0xFFFFFFFF) * 2.0 - 1.0)
-    n = math.sqrt(sum(v * v for v in vals)) or 1.0
-    return [v / n for v in vals]
 
 
 def fixed_centroids(dim: int, n_cells: int) -> list[list[float]]:

@@ -117,41 +117,6 @@ _A_MUL, _A_ADD = 1_103_515_245, 12_345
 _B_MUL, _B_ADD = 1_000_003, 17
 
 
-def shingle_base_hashes(sh: Column) -> Column:
-    """md5-derived base integer per shingle, in [0, P)."""
-    return F.transform(
-        sh,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-        % F.lit(MINHASH_P),
-    )
-
-
-def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 16) -> Column:
-    """Signature over pre-computed base hashes: sig[i] = min (a_i*h+b_i) mod P."""
-    p = F.lit(MINHASH_P)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                hashes,
-                lambda h: (
-                    ((F.lit(_A_MUL) * i + F.lit(_A_ADD)) % p) * h
-                    + (F.lit(_B_MUL) * i + F.lit(_B_ADD)) % p
-                )
-                % p,
-            )
-        ),
-    )
-
-
-def minhash_signature(text_col: Column | str, num_hashes: int = 16, shingle_k: int = 3) -> Column:
-    """MinHash signature as an array<long>; null for empty shingle sets.
-    Pure array expressions — zero shuffle, zero Python."""
-    sh = shingles(text_col, shingle_k)
-    sig = minhash_signature_from_hashes(shingle_base_hashes(sh), num_hashes)
-    return F.when(F.size(sh) > 0, sig)
-
-
 def lsh_band_keys(sig: Column, bands: int, rows_per_band: int) -> Column:
     """Band keys: md5 of the '|'-joined signature slice per band."""
     return F.transform(
@@ -374,38 +339,6 @@ class CCInterrupted(RuntimeError):
     with the same resume_dir continues instead of restarting."""
 
 
-def _cc_committed_rounds(spark, resume_dir: str) -> list[int]:
-    """Round numbers under resume_dir with a parquet _SUCCESS marker."""
-    sc = spark.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(resume_dir)
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    rounds = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith("round="):
-            ok = sc._jvm.org.apache.hadoop.fs.Path(
-                f"{resume_dir}/{name}/_SUCCESS"
-            )
-            if fs.exists(ok):
-                try:
-                    rounds.append(int(name[len("round="):]))
-                except ValueError:
-                    continue
-    return sorted(rounds)
-
-
-def _cc_converged_marker(spark, resume_dir: str, write: bool = False) -> bool:
-    sc = spark.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(f"{resume_dir}/_CONVERGED")
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-    if write:
-        fs.create(p, True).close()
-        return True
-    return bool(fs.exists(p))
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -474,11 +407,8 @@ def connected_components(
 
     Output: (node, cluster_id, cluster_size) — cluster_id = min member id.
     """
-    from reviews_quality_check_spark.operators.pinning import (
-        drop_path,
-        pin,
-        pin_tracked,
-    )
+    from reviews_quality_check_spark import sinks
+    from reviews_quality_check_spark.operators.pinning import pin, pin_tracked
 
     spark = edges.sparkSession
 
@@ -532,9 +462,7 @@ def connected_components(
             )
 
     def commit_round(df: DataFrame, k: int) -> DataFrame:
-        path = f"{resume_dir}/round={k}"
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return spark.read.parquet(sinks.commit_numbered(df, resume_dir, "round=", k))
 
     def finish(labels: DataFrame) -> DataFrame:
         sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_size"))
@@ -544,11 +472,11 @@ def connected_components(
 
     labels, round_k = None, 0
     if resume_dir is not None:
-        done = _cc_committed_rounds(spark, resume_dir)
+        done = sinks.committed_numbers(spark, resume_dir, "round=")
         if done:
             labels = spark.read.parquet(f"{resume_dir}/round={done[-1]}")
             round_k = done[-1] + 1
-            if _cc_converged_marker(spark, resume_dir):
+            if sinks.has_marker(spark, f"{resume_dir}/_CONVERGED"):
                 return finish(labels)
 
     und = pin(
@@ -612,15 +540,15 @@ def connected_components(
         # latest committed round plus its predecessor mid-delete).
         labels.unpersist()
         if prev_ckpt is not None:
-            drop_path(spark, prev_ckpt)
+            sinks.delete(spark, prev_ckpt)
         if resume_dir is not None and round_k >= 2:
-            drop_path(spark, f"{resume_dir}/round={round_k - 2}")
+            sinks.delete(spark, f"{resume_dir}/round={round_k - 2}")
         labels, prev_ckpt = new_labels, new_ckpt
         round_k += 1
         rounds_this_call += 1
         if changed == 0:
             if resume_dir is not None:
-                _cc_converged_marker(spark, resume_dir, write=True)
+                sinks.put_marker(spark, f"{resume_dir}/_CONVERGED")
             break
         if stop_after_rounds is not None and rounds_this_call >= stop_after_rounds:
             raise CCInterrupted(

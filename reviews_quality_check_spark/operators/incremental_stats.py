@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reviews_quality_check_spark import sinks
+
 #: state schema: partition_id, col_name, n, nulls, mn, mx, total (sum as
 #: decimal string for exactness across double ranges), hll (binary)
 _LG_K = 12
@@ -98,13 +100,7 @@ def compute_states(
 def append_states(states: DataFrame, out_dir: str) -> None:
     """Idempotent per-partition commit of state rows (dynamic overwrite
     on partition_id — re-ingesting a partition replaces its states)."""
-    (
-        states.repartition("partition_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_id")
-        .parquet(out_dir)
-    )
+    sinks.commit_partitions(states.repartition("partition_id"), out_dir, "partition_id")
 
 
 def merge_states(states: DataFrame) -> DataFrame:

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from reviews_quality_check_spark.functions.arrays import lit_array_str
-
 from reviews_quality_check_spark.functions.readability import flesch_reading_ease_fast
 
 # sentence incl. its trailing terminator run (engine-canonical
@@ -118,10 +116,6 @@ GRAMMAR_VERB_STEMS = (
 )
 
 _P_WORD = r"[a-z]+"
-
-
-def _lit_arr(words: tuple[str, ...]) -> Column:
-    return lit_array_str(words)
 
 
 def _mini_tag(w: Column) -> Column:

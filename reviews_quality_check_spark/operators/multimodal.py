@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) column operators.
 
-Media is carried as opaque ``binary`` payloads with typed metadata
-(schema.MEDIA_SCHEMA). Decode / feature-extraction runs as Arrow-batched
+Media is carried as opaque ``binary`` payloads keyed by ``media_id``
+with a ``kind`` tag. Decode / feature-extraction runs as Arrow-batched
 ``mapInPandas`` so each Python worker touches whole record batches, and
 payload bytes never round-trip through the driver.
 
@@ -271,12 +271,6 @@ def decode_payload(payload) -> tuple[str, list[float], bool]:
         if feats is not None:
             return (name, feats, True)
     return ("unknown", [0.0] * 8, False)
-
-
-DECODE_SCHEMA = (
-    "media_id long, kind string, fmt string, feat_dim int, "
-    "features array<float>, decode_ok boolean"
-)
 
 
 def extract_media_features(

@@ -38,6 +38,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from reviews_quality_check_spark import sinks
+
 
 def engine_checkpoint_dir() -> str | None:
     """The engine-wide reliable-checkpoint root: ``$RQC_CHECKPOINT_DIR``
@@ -109,14 +111,6 @@ def spark_checkpoint_root(sc) -> str | None:
     return opt.get() if opt.isDefined() else None
 
 
-def _children(sc, path: str) -> list[str]:
-    p = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    return [st.getPath().toString() for st in fs.listStatus(p)]
-
-
 def pin_tracked(
     df: DataFrame, checkpoint_dir: str | None = None, eager: bool = True
 ) -> tuple[DataFrame, str | None]:
@@ -131,22 +125,10 @@ def pin_tracked(
         checkpoint_dir = engine_checkpoint_dir()
     if checkpoint_dir is None:
         return df.localCheckpoint(eager=eager), None
-    sc = df.sparkSession.sparkContext
-    ensure_checkpoint_dir(sc, checkpoint_dir)
-    root = spark_checkpoint_root(sc)
-    before = set(_children(sc, root))
+    spark = df.sparkSession
+    ensure_checkpoint_dir(spark.sparkContext, checkpoint_dir)
+    root = spark_checkpoint_root(spark.sparkContext)
+    before = set(sinks.children(spark, root))
     out = df.checkpoint(eager=eager)
-    new = [c for c in _children(sc, root) if c not in before]
+    new = [c for c in sinks.children(spark, root) if c not in before]
     return out, (new[0] if len(new) == 1 else None)
-
-
-def drop_path(spark, path: str) -> None:
-    """Recursively delete ``path`` via the Hadoop FS API (works for any
-    configured filesystem — local, HDFS, S3A). Used by iterative
-    operators to free superseded round artifacts (ADVICE r4 #3:
-    unpersist() drops cached blocks but reliable checkpoint/commit
-    FILES would otherwise accumulate O(rounds x |nodes|))."""
-    sc = spark.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-    fs.delete(p, True)

@@ -253,7 +253,7 @@ def predict_lang(text: str) -> str:
 
 # --- sentiment validation (surrogate-model chain) ----------------------------
 def validate_sentiment(text: str, labeled: str, domain: str | None) -> dict:
-    """Mirror of functions/sentiment_rules.validate_sentiment_columns —
+    """Mirror of functions/sentiment_rules.attach_validation —
     the reference chain sentiment.py:399-513 with the deterministic
     surrogate scorer. Returns predicted/confidence/is_mismatch."""
     text_lower = text.lower()

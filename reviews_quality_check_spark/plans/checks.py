@@ -20,21 +20,11 @@ file) as a compiled declarative plan per partition.
 
 from __future__ import annotations
 
-import operator
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-_OPS: dict[str, Callable[[float, float], bool]] = {
-    "<=": operator.le,
-    "<": operator.lt,
-    ">=": operator.ge,
-    ">": operator.gt,
-    "==": operator.eq,
-}
-
 
 @dataclass(frozen=True)
 class RowCheck:

@@ -19,12 +19,14 @@ Plan shape (the 100 TB story):
     written from it, so the tiny sinks cost one Spark job each instead
     of re-running the verdict plan.
 
-Checkpoint/resume (north_rule): verdicts/violations are written
-partitioned by partition_id with dynamic partition overwrite (an
-idempotent per-partition commit, the parquet-dir stand-in for an
-Iceberg table in this sandbox); lineage rows are appended LAST, so a
-killed run simply re-processes partitions that have no lineage row.
-``run(resume=True)`` anti-joins the input against committed lineage.
+Checkpoint/resume (north_rule) follows the engine's one commit
+protocol, ``sinks.py``: verdicts and violations are per-partition
+commits on partition_id (dynamic partition overwrite: idempotent, the
+parquet-dir stand-in for an Iceberg table), and a history read treats
+only a missing or empty sink as "nothing committed". Metrics and
+lineage rows are appended, lineage LAST, so a killed run simply
+re-processes partitions that have no lineage row. ``run(resume=True)``
+skips the partitions committed lineage already lists.
 """
 
 from __future__ import annotations
@@ -34,20 +36,24 @@ from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark import StorageLevel
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from reviews_quality_check_spark import sinks
 from reviews_quality_check_spark.plans.checks import Suite
 
 # Reserved check name of the per-partition row-count verdict row: the
 # volume series of the metrics history and the source of lineage.
 ROWS_SCANNED = "__rows_scanned"
-# Read errors that mean "nothing committed yet": the sink directory is
-# absent, or holds no data files (a write of zero rows leaves only
-# _SUCCESS). Any other read error is a broken history and propagates.
-_NO_HISTORY = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+# Columns of the committed result sinks, in the order a read returns
+# them (partition column last): the result of a sink with no rows.
+_SINK_COLUMNS = {
+    "verdicts": "check_name string, passed boolean, violation_count long, "
+    "metric_value double, threshold double, partition_id string",
+    "violations": "check_name string, row_key string, detail string, "
+    "partition_id string",
+}
 # Flagged-projection caches of previous runs (bounded to one entry):
 # dropped at the start of the next run — see SuiteRunner.run.
 _RUN_CACHES: list[DataFrame] = []
@@ -177,7 +183,7 @@ class SuiteRunner:
 
     def agg_verdicts_plan(self, base: DataFrame) -> DataFrame | None:
         """``base`` must already carry the ``__part`` column (the flagged
-        projection) so agg checks reuse the same (possibly persisted)
+        projection) so agg checks reuse the same (persisted)
         scan instead of re-deriving the input."""
         suite = self.suite
         if not suite.agg_checks:
@@ -208,18 +214,17 @@ class SuiteRunner:
         df: DataFrame,
         partition_expr: Column,
         resume: bool = True,
-        persist: bool = True,
         run_seq: int | None = None,
     ) -> SuiteResult:
-        """``persist=True`` (default since r6) caches the narrow flagged
-        projection (MEMORY_AND_DISK) so the verdict aggregate, the
-        violation explode, and every AggCheck reuse ONE evaluation of
-        the check expressions — without it each of those plan branches
-        re-scans the input and re-evaluates the expensive per-row
-        expressions (the 7-check flagship suite paid ~2x flesch + 2x
-        gopher + 1x md5 per pass; measured 8.3s -> 4.4s per pass at
-        300k pages). The projection is narrow (O(checks) bytes per
-        row), so the cache is small even when rows carry html blobs.
+        """Each run caches the narrow flagged projection
+        (MEMORY_AND_DISK) so the verdict aggregate, the violation
+        explode, and every AggCheck reuse ONE evaluation of the check
+        expressions — without it each of those plan branches re-scans
+        the input and re-evaluates the expensive per-row expressions
+        (the 7-check flagship suite paid ~2x flesch + 2x gopher + 1x md5
+        per pass; measured 8.3s -> 4.4s per pass at 300k pages). The
+        projection is narrow (O(checks) bytes per row), so the cache is
+        small even when rows carry html blobs.
 
         HONESTY GUARD: each run's cache is tagged with a fresh run id
         column so Spark's CacheManager can never serve a PREVIOUS run's
@@ -253,20 +258,21 @@ class SuiteRunner:
                     )
                 df = df.filter(partition_expr.cast("string").isin(remaining))
 
-        flagged = self._flagged(df, partition_expr)
-        if persist:
-            for old in _RUN_CACHES:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-            _RUN_CACHES.clear()
-            # fresh literal per run -> unique plan -> a new cache entry;
-            # the column is never selected downstream, so results are
-            # unchanged while cross-run cache hits are impossible
-            flagged = flagged.withColumn("__cache_epoch", F.lit(run_id))
-            flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
-            _RUN_CACHES.append(flagged)
+        for old in _RUN_CACHES:
+            try:
+                old.unpersist()
+            except Exception:
+                pass
+        _RUN_CACHES.clear()
+        # fresh literal per run -> unique plan -> a new cache entry; the
+        # column is never selected downstream, so results are unchanged
+        # while cross-run cache hits are impossible
+        flagged = (
+            self._flagged(df, partition_expr)
+            .withColumn("__cache_epoch", F.lit(run_id))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        _RUN_CACHES.append(flagged)
         verdicts = self.row_verdicts_plan(flagged)
         aggv = self.agg_verdicts_plan(flagged)
         if aggv is not None:
@@ -279,8 +285,7 @@ class SuiteRunner:
                     run_seq = self.next_run_seq(spark)
                 self._commit(run_id, run_seq, verdicts, violations)
             finally:
-                if persist:
-                    flagged.unpersist()  # outputs are on disk (or failed)
+                flagged.unpersist()  # outputs are on disk (or failed)
             return SuiteResult(
                 self._read_out("verdicts", spark),
                 self._read_out("violations", spark),
@@ -294,26 +299,14 @@ class SuiteRunner:
     def _path(self, name: str) -> str:
         return str(Path(self.out_dir) / name)
 
-    def _read_history(self, name: str, spark: SparkSession) -> DataFrame | None:
-        """The committed sink ``name``, or None when nothing is committed
-        there yet. Any other read error (a corrupt or unreadable sink)
-        propagates: treating it as "no history" would silently recompute
-        every partition or reuse run_seqs."""
-        try:
-            return spark.read.parquet(self._path(name))
-        except AnalysisException as e:
-            if e.getCondition() in _NO_HISTORY:
-                return None
-            raise
-
     def _read_out(self, name: str, spark: SparkSession) -> DataFrame:
-        out = self._read_history(name, spark)
+        out = sinks.read_committed(spark, self._path(name))
         if out is None:
-            return spark.createDataFrame([], "partition_id string, check_name string")
+            return spark.createDataFrame([], _SINK_COLUMNS[name])
         return out
 
     def committed_partitions(self, spark: SparkSession) -> list[str]:
-        lineage = self._read_history("lineage", spark)
+        lineage = sinks.read_committed(spark, self._path("lineage"))
         if lineage is None:
             return []
         return [
@@ -347,13 +340,10 @@ class SuiteRunner:
         )
         is_rows = F.col("check_name") == ROWS_SCANNED
         try:
-            (
-                evaluated.filter(~is_rows)
-                .drop("__cache_epoch")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("partition_id")
-                .parquet(self._path("verdicts"))
+            sinks.commit_partitions(
+                evaluated.filter(~is_rows).drop("__cache_epoch"),
+                self._path("verdicts"),
+                "partition_id",
             )
             # Deterministic per-(partition, check) cap: a global limit()
             # would let one high-volume check evict every other check's
@@ -363,15 +353,13 @@ class SuiteRunner:
             # runs on the write's partition_id partitioning, so the rows
             # shuffle once.
             capw = Window.partitionBy("partition_id", "check_name").orderBy("row_key")
-            (
+            sinks.commit_partitions(
                 violations.repartition("partition_id")
                 .withColumn("__rn", F.row_number().over(capw))
                 .filter(F.col("__rn") <= self.cap)
-                .drop("__rn")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("partition_id")
-                .parquet(self._path("violations"))
+                .drop("__rn"),
+                self._path("violations"),
+                "partition_id",
             )
             # metrics HISTORY (append-only, one row per run x partition x
             # check + the __rows_scanned volume series) — the input
@@ -411,7 +399,7 @@ class SuiteRunner:
     def next_run_seq(self, spark: SparkSession) -> int:
         """Next run sequence number: max committed run_seq + 1 (0 for a
         fresh out_dir). A bounded-metadata read of the metrics sink."""
-        m = self._read_history("metrics", spark)
+        m = sinks.read_committed(spark, self._path("metrics"))
         if m is None:
             return 0
         row = m.agg(F.max("run_seq").alias("mx")).collect()[0]

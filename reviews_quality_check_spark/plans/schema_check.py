@@ -25,10 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: verdict statuses, in severity order
-STATUSES = ("ok", "type_mismatch", "missing", "extra")
-
-
 def schema_verdicts(
     df: DataFrame, expected: tuple[tuple[str, str], ...]
 ) -> list[tuple[str, str | None, str | None, str]]:

@@ -44,12 +44,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: suggestion output schema (all scalars — driver-canonicalizer safe):
-#: col_name, rule, params (string list or ''), param_lo/param_hi
-#: (numeric rule bounds, NULL when n/a), observed (rule-specific metric)
-SUGGEST_COLUMNS = ("col_name", "rule", "params", "param_lo", "param_hi", "observed")
-
-
 def profile_columns(
     df: DataFrame,
     numeric_cols: tuple[str, ...],
@@ -109,7 +103,10 @@ def suggest_constraints(
     max_card: int = 20,
     approx: bool = False,
 ) -> DataFrame:
-    """Profile ``df`` and return suggestion rows (SUGGEST_COLUMNS)."""
+    """Profile ``df`` and return suggestion rows. All columns are
+    scalars (driver-canonicalizer safe): col_name, rule, params (string
+    list or ''), param_lo/param_hi (numeric rule bounds, NULL when n/a),
+    observed (rule-specific metric)."""
     prof = profile_columns(df, numeric_cols, string_cols, max_card, approx)
     rows: list[tuple] = []  # (col, rule, params, lo, hi, observed)
     for c in tuple(numeric_cols) + tuple(string_cols):

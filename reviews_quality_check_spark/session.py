@@ -55,7 +55,3 @@ def get_spark(
     return spark
 
 
-def stop_all() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -11,23 +11,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     d = sf_dir or DEFAULT_SF_DIR
     return spark.read.parquet(str(Path(d) / f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {t: load(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    for t in TABLES:
-        load(spark, t, sf_dir).createOrReplaceTempView(t)

@@ -4,8 +4,10 @@ The reference is strictly batch; the north_star adds drift across
 ``warc_ts`` windows. The batch form lives in operators/drift.py; this
 module provides the streaming counterpart: a watermark-bounded windowed
 histogram stream plus an ``applyInPandasWithState``-free drift stage
-(foreachBatch joins each micro-batch's windows against the previous
-state table — deterministic and restart-safe via checkpointLocation).
+(foreachBatch merges each micro-batch's closed windows with a bounded,
+versioned state of the most recent windows — deterministic and
+restart-safe via checkpointLocation and the numbered commits of
+``sinks.py``).
 
 Design: windowed aggregation is the ONLY stateful streaming operator
 used; KL against the previous window is computed per micro-batch from
@@ -18,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from reviews_quality_check_spark import sinks
 
 
 def windowed_histogram_stream(
@@ -45,66 +49,6 @@ def windowed_histogram_stream(
     )
 
 
-def drift_foreach_batch(history_path: str, metric: str = "kl", eps: float = 1e-6):
-    """foreachBatch callback: append closed windows to a history table,
-    then emit drift of each new window vs its predecessor.
-
-    Returns (callback, drift_sink_path) — drift rows land next to the
-    history as parquet. Deterministic across restarts: history appends
-    are idempotent per (window_start, category) because append-mode
-    windows only fire once past the watermark.
-    """
-    drift_path = history_path.rstrip("/") + "_drift"
-
-    def callback(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch_df.write.mode("append").parquet(history_path)
-        try:
-            hist = spark.read.parquet(history_path)
-        except Exception:
-            return
-        from reviews_quality_check_spark.operators.drift import (
-            categorical_window_drift,
-        )
-
-        # recompute drift over the full (small) history: windows × cats,
-        # weighting by the pre-aggregated per-window counts
-        probs_input = hist.select(
-            F.col("window_start").cast("timestamp").alias("ts"),
-            "category",
-            "cnt",
-        )
-        drift = categorical_window_drift(
-            probs_input, "ts", "category", "1 hour",
-            metric=metric, eps=eps, count_col="cnt",
-        )
-        drift.write.mode("overwrite").parquet(drift_path)
-
-    return callback, drift_path
-
-
-def start_drift_monitor(
-    stream: DataFrame,
-    ts_col: str,
-    cat_col: str,
-    checkpoint_dir: str,
-    history_path: str,
-    window_expr: str = "1 hour",
-    watermark: str = "1 hour",
-):
-    """Wire the full streaming drift pipeline; returns the StreamingQuery."""
-    hist_stream = windowed_histogram_stream(stream, ts_col, cat_col, window_expr, watermark)
-    callback, _ = drift_foreach_batch(history_path)
-    return (
-        hist_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(callback)
-        .start()
-    )
-
-
 def incremental_drift_foreach_batch(
     state_path: str,
     metric: str = "kl",
@@ -128,6 +72,10 @@ def incremental_drift_foreach_batch(
        (idempotent under foreachBatch replay);
     4. write the most recent ``state_windows`` windows to a VERSIONED
        state dir ``{state}/v=<batch_id>``.
+
+    Drift subdirs and state versions are numbered commits
+    (sinks.commit_numbered): one counts as committed only once its
+    ``_SUCCESS`` marker exists.
 
     State versioning is what makes failure-replay exact: a replayed
     batch re-reads the previous batch's state version (untouched by the
@@ -156,34 +104,13 @@ def incremental_drift_foreach_batch(
     """
     drift_path = state_path.rstrip("/") + "_drift"
 
-    def _numbered_subdirs(spark, dir_path, prefix):
-        """Committed <prefix><n> subdir numbers (possibly empty list)."""
-        sc = spark.sparkContext
-        hadoop_conf = sc._jsc.hadoopConfiguration()
-        p = sc._jvm.org.apache.hadoop.fs.Path(dir_path)
-        fs = p.getFileSystem(hadoop_conf)
-        if not fs.exists(p):
-            return []
-        versions = []
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith(prefix):
-                try:
-                    versions.append(int(name[len(prefix):]))
-                except ValueError:
-                    continue
-        return sorted(versions)
-
-    def _state_versions(spark, dir_path):
-        return _numbered_subdirs(spark, dir_path, "v=")
-
     def callback(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         # replay reads the PREVIOUS batch's version — the crashed
         # attempt may have written (even corrupted) v=<batch_id> itself
-        versions = _state_versions(spark, state_path)
+        versions = sinks.committed_numbers(spark, state_path, "v=")
         prior = [v for v in versions if v < batch_id]
         prev = max(prior) if prior else None
         if prev is None:
@@ -213,7 +140,7 @@ def incremental_drift_foreach_batch(
                 )
             stale_batches = [
                 b
-                for b in _numbered_subdirs(spark, drift_path, "batch=")
+                for b in sinks.committed_numbers(spark, drift_path, "batch=")
                 if b > batch_id
             ]
             if stale_batches:
@@ -251,7 +178,7 @@ def incremental_drift_foreach_batch(
             ),
             "ts", "category", window_expr, metric=metric, eps=eps, count_col="cnt",
         ).filter(F.col("window_start").isin(new_windows))
-        drift.write.mode("overwrite").parquet(f"{drift_path}/batch={batch_id}")
+        sinks.commit_numbered(drift, drift_path, "batch=", batch_id)
 
         keep = [
             r["window_start"]
@@ -263,16 +190,14 @@ def incremental_drift_foreach_batch(
         ]
         # versioned state commit: replay rewrites v=<batch_id> only; the
         # previous version survives for the replay's own read
-        uni.filter(F.col("window_start").isin(keep)).write.mode(
-            "overwrite"
-        ).parquet(f"{state_path}/v={batch_id}")
+        sinks.commit_numbered(
+            uni.filter(F.col("window_start").isin(keep)), state_path, "v=", batch_id
+        )
         # prune versions older than the previous one (only the latest
         # uncommitted batch can ever be replayed)
-        sc = spark.sparkContext
-        hadoop_conf = sc._jsc.hadoopConfiguration()
-        for v in [x for x in _state_versions(spark, state_path) if x < batch_id][:-1]:
-            p = sc._jvm.org.apache.hadoop.fs.Path(f"{state_path}/v={v}")
-            p.getFileSystem(hadoop_conf).delete(p, True)
+        older = [v for v in sinks.committed_numbers(spark, state_path, "v=") if v < batch_id]
+        for v in older[:-1]:
+            sinks.delete(spark, f"{state_path}/v={v}")
 
     return callback, drift_path
 
@@ -288,8 +213,8 @@ def start_incremental_drift_monitor(
     metric: str = "kl",
     state_windows: int = 4,
 ):
-    """Streaming drift with bounded incremental state (the scale path of
-    start_drift_monitor); returns the StreamingQuery."""
+    """Wire the streaming drift pipeline: windowed histograms into the
+    bounded incremental drift stage; returns the StreamingQuery."""
     hist_stream = windowed_histogram_stream(stream, ts_col, cat_col, window_expr, watermark)
     callback, _ = incremental_drift_foreach_batch(
         state_path, metric=metric, state_windows=state_windows,

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from reviews_quality_check_spark import sinks
+
 
 def batch_metrics(batch_df: DataFrame, series_col: str) -> DataFrame:
     """Per-series row counts for one micro-batch plus an __all series
@@ -52,29 +54,24 @@ def metrics_foreach_batch(metrics_dir: str, series_col: str):
     series absent from this batch get an explicit value=0 row, making
     the dead feed visible to the per-series detectors within one
     micro-batch — the docstring's contract. The known-series read is
-    O(batches x series) metadata, not data."""
+    O(batches x series) metadata, not data, and only a history with
+    nothing committed yet skips it: an unreadable one fails the batch
+    instead of silently dropping the dead-feed points."""
 
     def callback(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         m = batch_metrics(batch_df, series_col)
-        try:
-            known = (
-                spark.read.parquet(metrics_dir)
-                .select("metric").distinct()
+        known = sinks.read_committed(batch_df.sparkSession, metrics_dir)
+        if known is not None:
+            zeros = (
+                known.select("metric").distinct()
+                .join(m.select("metric"), "metric", "left_anti")
+                .select("metric", F.lit(0).cast("long").alias("value"))
             )
-            zeros = known.join(
-                m.select("metric"), "metric", "left_anti"
-            ).select("metric", F.lit(0).cast("long").alias("value"))
             m = m.unionByName(zeros)
-        except Exception:
-            pass  # first batch: no history yet
-        (
-            m.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(metrics_dir)
+        sinks.commit_partitions(
+            m.withColumn("batch_id", F.lit(int(batch_id)).cast("long")).repartition(1),
+            metrics_dir,
+            "batch_id",
         )
 
     return callback

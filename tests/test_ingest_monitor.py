@@ -128,3 +128,24 @@ def test_dead_feed_flagged_within_one_batch(spark, tmp_path):
         for r in ingest_anomalies(spark, metrics).collect()
     }
     assert flags["t1", 4]["rel_anomaly"]  # dead feed flagged
+
+
+def test_corrupt_metrics_history_fails_the_batch(spark, tmp_path):
+    """Only a metrics dir with nothing committed means "first batch";
+    an unreadable history fails the callback instead of silently
+    skipping the densification that makes dead feeds visible."""
+    import pytest
+
+    metrics = tmp_path / "m"
+    d = spark.range(10).select(
+        F.col("id").alias("event_id"),
+        F.lit("t0").alias("event_type"),
+    )
+    cb = metrics_foreach_batch(str(metrics), "event_type")
+    cb(d, 0)
+    files = list(metrics.rglob("*.parquet"))
+    assert files
+    for f in files:
+        f.write_bytes(b"not parquet at all")
+    with pytest.raises(Exception, match="(?i)parquet|footer"):
+        cb(d, 1)

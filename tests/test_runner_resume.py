@@ -35,7 +35,9 @@ def _suite() -> C.Suite:
 
 
 def test_verdicts_and_violations(pages):
-    res = SuiteRunner(_suite()).run(pages, F.col("day"), resume=False)
+    suite = _suite()
+    suite.add(C.matches_regex("url", r"^https://[ab]/"))
+    res = SuiteRunner(suite).run(pages, F.col("day"), resume=False)
     v = {(r["partition_id"], r["check_name"]): r for r in res.verdicts.collect()}
     assert v[("d1", "not_blank_text")]["passed"] is False
     assert v[("d1", "not_blank_text")]["violation_count"] == 1
@@ -44,10 +46,13 @@ def test_verdicts_and_violations(pages):
     assert v[("d2", "unique_url")]["passed"] is False
     assert v[("d2", "unique_url")]["violation_count"] == 1  # Σ(cnt-1) for b/1
     assert v[("d3", "not_blank_text")]["passed"] is True
+    assert v[("d1", "regex_url")]["passed"] is True
+    assert v[("d3", "regex_url")]["violation_count"] == 1
 
     viol = {(r["partition_id"], r["check_name"], r["row_key"]) for r in res.violations.collect()}
     assert ("d1", "not_blank_text", "https://a/2") in viol
     assert ("d1", "in_set_lang", "https://a/3") in viol
+    assert {(p, k) for p, c, k in viol if c == "regex_url"} == {("d3", "https://c/1")}
 
 
 def test_predicate_check_gopher_conjunction(pages):
@@ -147,6 +152,8 @@ def test_agg_only_suite_commits_empty_violations(pages, tmp_path, spark):
     runner = SuiteRunner(s, out_dir=str(tmp_path / "out"))
     res = runner.run(pages, F.col("day"), resume=False)
     assert res.violations.count() == 0
+    # the empty sink reads back with the violation sink's full columns
+    assert set(res.violations.columns) == {"partition_id", "check_name", "row_key", "detail"}
     assert {r["partition_id"] for r in res.verdicts.collect()} == {"d1", "d2", "d3"}
     assert set(runner.committed_partitions(spark)) == {"d1", "d2", "d3"}
     assert runner.next_run_seq(spark) == 1
@@ -211,3 +218,57 @@ def test_failed_sink_write_releases_caches(pages, tmp_path, spark):
         SuiteRunner(_suite(), out_dir=str(out)).run(pages, F.col("day"), resume=False)
     assert sc._jsc.getPersistentRDDs().size() == 0
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+_SINK_WRITES = ("verdicts", "violations", "metrics", "lineage")
+
+
+@pytest.mark.parametrize("crash_at", [1, 2, 3, 4], ids=_SINK_WRITES)
+def test_resume_after_crash_at_each_sink_write(pages, tmp_path, spark, monkeypatch, crash_at):
+    """A run killed at any of its four sink writes, resumed under the
+    crashed run's run_seq, leaves the same outputs as a one-shot run:
+    identical verdicts and violations, one lineage row per partition,
+    and one metrics-history point per (series, run_seq)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    one_shot = str(tmp_path / "one_shot")
+    SuiteRunner(_suite(), out_dir=one_shot).run(pages, F.col("day"), resume=False)
+
+    out = str(tmp_path / "out")
+    runner = SuiteRunner(_suite(), out_dir=out)
+    runner.run(pages.filter(F.col("day") == "d1"), F.col("day"), run_seq=0)
+
+    real_parquet = DataFrameWriter.parquet
+    writes: list[str] = []
+
+    def crashing_parquet(self, path, *args, **kwargs):
+        if str(path).startswith(out):
+            writes.append(str(path))
+            if len(writes) == crash_at:
+                raise RuntimeError(f"injected crash at sink write {crash_at}")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crashing_parquet)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        runner.run(pages, F.col("day"), resume=True, run_seq=1)
+    monkeypatch.undo()
+    assert writes[-1].endswith(_SINK_WRITES[crash_at - 1])
+
+    res = runner.run(pages, F.col("day"), resume=True, run_seq=1)
+    assert res.partitions_skipped == 1  # d1, committed before the crash
+
+    def rows(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    for sink in ("verdicts", "violations"):
+        assert rows(f"{out}/{sink}") == rows(f"{one_shot}/{sink}")
+    lineage = [r["partition_id"] for r in spark.read.parquet(out + "/lineage").collect()]
+    assert sorted(lineage) == ["d1", "d2", "d3"]
+
+    points = [(r["metric"], r["window_id"]) for r in runner.history_anomalies(spark).collect()]
+    series = ("not_blank_text", "in_set_lang", "unique_url", "__rows_scanned")
+    want = {(f"d1/{c}", 0) for c in series} | {
+        (f"{p}/{c}", 1) for p in ("d2", "d3") for c in series
+    }
+    assert len(points) == len(want)
+    assert set(points) == want
